@@ -149,6 +149,66 @@ def test_split_write_and_distributed_read(spark, sf_dir):
         )
 
 
+def _split_payloads(spark, n: int, parts: int):
+    return spark.range(0, n, 1, parts).selectExpr(
+        "CASE id % 3 WHEN 0 THEN 'Train' WHEN 1 THEN 'Val' ELSE 'Test' END AS dataset",
+        "encode(CAST(id AS STRING), 'UTF-8') AS rec",
+    )
+
+
+def test_split_sink_is_one_job(spark, tmp_path):
+    """All three splits are written by ONE Spark job (Beam's single-pass
+    tagged outputs), not one filter + job per split."""
+    from videos_to_tfrecords_spark.sources.tfrecord import write_split_tfrecords
+
+    df = _split_payloads(spark, 30, 3).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    sc.setJobGroup("split_sink_one_job", "write_split_tfrecords")
+    try:
+        counts = write_split_tfrecords(df, "rec", "dataset", str(tmp_path))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert counts == {"Train": 10, "Val": 10, "Test": 10}
+    assert len(sc.statusTracker().getJobIdsForGroup("split_sink_one_job")) == 1
+    # the staging directory is gone; only final-named shards remain
+    assert sorted(os.listdir(os.path.join(tmp_path, "data"))) == ["test", "train", "val"]
+
+
+def test_split_sink_empty_partitions_write_empty_shards(spark, tmp_path):
+    """One shard per split per partition, empty ones included, and
+    MMMMM in ``-of-MMMMM`` is the partition count."""
+    from videos_to_tfrecords_spark.sources.tfrecord import write_split_tfrecords
+
+    df = _split_payloads(spark, 4, 1).repartition(6)  # ≥2 partitions stay empty
+    counts = write_split_tfrecords(df, "rec", "dataset", str(tmp_path))
+    assert counts == {"Train": 2, "Val": 1, "Test": 1}
+    for split, want in counts.items():
+        p = split.lower()
+        d = os.path.join(tmp_path, "data", p)
+        assert sorted(os.listdir(d)) == [f"{p}-{i:05d}-of-00006.tfrecord" for i in range(6)]
+        shards = [os.path.join(d, f) for f in os.listdir(d)]
+        assert sum(len(list(read_records(f))) for f in shards) == want
+        assert sum(os.path.getsize(f) == 0 for f in shards) >= 6 - want
+
+
+def test_split_sink_rejects_unknown_split_values(spark, tmp_path):
+    """A null or unlisted split value is an error naming the value, never
+    a silently dropped row, and no final-named shard is left behind."""
+    import pytest
+
+    from videos_to_tfrecords_spark.sources.tfrecord import write_split_tfrecords
+
+    for bad in ("Holdout", None):
+        df = spark.createDataFrame(
+            [("Train", b"a"), (bad, b"b")], "dataset string, rec binary"
+        ).repartition(2)
+        out = os.path.join(tmp_path, str(bad))
+        with pytest.raises(ValueError, match=repr(bad)):
+            write_split_tfrecords(df, "rec", "dataset", out)
+        assert sorted(os.listdir(os.path.join(out, "data"))) == ["test", "train", "val"]
+        assert not glob.glob(os.path.join(out, "data", "*", "*"))
+
+
 def test_python_datasource_roundtrip(spark, sf_dir):
     """spark.read/write.format('tfrecord') via the Spark 4 Python Data
     Source API: write a sharded dataset, read it back, verify multiset."""

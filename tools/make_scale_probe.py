@@ -7,8 +7,8 @@ not 10x exact clones) and embeddings get a per-replica array rotation
 
 Usage: python tools/make_scale_probe.py [out_dir]   (default .scale_probe/sf1)
 """
+import argparse
 import os
-import sys
 
 import numpy as np
 import pyarrow as pa
@@ -16,7 +16,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+DEFAULT_OUT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scale_probe", "sf1"
 )
 REPLICAS = 10
@@ -45,10 +45,13 @@ SHIFT_COLS = {
 }
 
 
-def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+def main(argv: list[str] | None = None) -> None:
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("out_dir", nargs="?", default=DEFAULT_OUT, help="output directory")
+    out_dir = p.parse_args(argv).out_dir
+    os.makedirs(out_dir, exist_ok=True)
     for dim in ("region", "nation"):
-        pq.write_table(pq.read_table(f"{SRC}/{dim}.parquet"), f"{OUT}/{dim}.parquet")
+        pq.write_table(pq.read_table(f"{SRC}/{dim}.parquet"), f"{out_dir}/{dim}.parquet")
     for tname, shifts in SHIFT_COLS.items():
         base = pq.read_table(f"{SRC}/{tname}.parquet")
         reps = []
@@ -75,7 +78,7 @@ def main() -> None:
                 t = t.set_column(t.schema.get_field_index("embedding"), "embedding", arr)
             reps.append(t)
         out = pa.concat_tables(reps).combine_chunks()
-        pq.write_table(out, f"{OUT}/{tname}.parquet", row_group_size=200_000)
+        pq.write_table(out, f"{out_dir}/{tname}.parquet", row_group_size=200_000)
         print(tname, out.num_rows)
 
 

@@ -8,8 +8,9 @@ maps to the Spark master URL; everything else drives the same pipeline the
 ``video_pipeline_*`` queries run: manifest → extension filter → label
 extraction (P3) → split (R1) → decode (U1) → batched inference (U2) → mode
 dispatch (crop_video | full_video | single_frame, preprocess.py:399-406) →
-FormatFeatures (G5/G6) → SequenceExample (U3) → shuffled sharded TFRecords
-per split (R2+S4, preprocess.py:389-416).
+FormatFeatures (G5/G6) → shuffle (R2) → one writer job that encodes each
+SequenceExample (U3) and writes every split's shards (S4,
+preprocess.py:389-416).
 
 Usage:
     python -m videos_to_tfrecords_spark.cli \
@@ -52,83 +53,48 @@ def parse_arguments(argv: list[str] | None = None) -> argparse.Namespace:
 def build_pipeline(spark: SparkSession, args: argparse.Namespace) -> dict[str, int]:
     """The composition root (reference build_pipeline, preprocess.py:371-416).
     Returns records-written per split."""
-    from videos_to_tfrecords_spark.ml.inference import batch_inference, linear_stub_model
-    from videos_to_tfrecords_spark.ml.video import decode_videos
-    from videos_to_tfrecords_spark.operators.filenames import (
-        create_filenames,
-        extract_label,
-    )
+    from videos_to_tfrecords_spark.ml.inference import linear_stub_model
+    from videos_to_tfrecords_spark.ml.video import decode_and_infer
+    from videos_to_tfrecords_spark.operators.filenames import create_filenames, extract_label
     from videos_to_tfrecords_spark.operators.sequence import (
-        crop_video,
-        format_features,
-        single_frame,
-        to_full_video,
+        crop_video, format_features, single_frame, to_full_video,
     )
     from videos_to_tfrecords_spark.operators.shuffle import shuffle
     from videos_to_tfrecords_spark.operators.split import with_random_split
-    from videos_to_tfrecords_spark.schema import CONTEXT_COLUMNS, LIST_COLUMNS
-    from videos_to_tfrecords_spark.sources.tfrecord import (
-        with_sequence_example,
-        write_split_tfrecords,
-    )
+    from videos_to_tfrecords_spark.schema import CONTEXT_COLUMNS as CTX, LIST_COLUMNS as LISTS
+    from videos_to_tfrecords_spark.sources import tfrecord
 
     with open(args.input_manifest) as fh:
         files = [line.strip() for line in fh if line.strip()]
 
-    listed = create_filenames(spark, files)  # S2 + P2
-    labeled = extract_label(listed)  # P3
-    stamped = with_random_split(
-        labeled, args.train, args.val, args.test, seed=args.seed
-    )  # R1
-    frames = decode_videos(
-        stamped, skip_msec=args.frame_sample_rate, cloud=args.cloud
-    )  # U1 + P7/P8/R4
-    embedded = batch_inference(
-        frames.drop("height", "width", "channels"),
-        "image",
-        linear_stub_model(12, 8),
-        drop_input=True,  # U2 (+P4)
-    )
+    labeled = extract_label(create_filenames(spark, files))  # S2 + P2, P3
+    stamped = with_random_split(labeled, args.train, args.val, args.test, seed=args.seed)  # R1
+    # U1 + U2 (+P4/P7/P8/R4) fused: one Python boundary, frames never cross
+    # Arrow (pytest-asserted identical to decode_videos → batch_inference)
+    embedded = decode_and_infer(
+        stamped, linear_stub_model(12, 8), skip_msec=args.frame_sample_rate, cloud=args.cloud
+    ).drop("height", "width", "channels")
 
     # mode dispatch — driver-side control flow, reference preprocess.py:399-406
     if args.mode == "crop_video":
         length_ms = F.lit(1000.0) * F.col("frame_total") / F.col("frame_per_sec")
         grouped = crop_video(
-            embedded.withColumn("length_ms", length_ms),
-            ts_ms_col="timestamp_ms",
-            key_cols=["filename"],
-            size_ms=args.sequence_length,
-            slide_ms=args.period,
-            length_ms_col="length_ms",
-            partial_policy="reference",
+            embedded.withColumn("length_ms", length_ms), ts_ms_col="timestamp_ms",
+            key_cols=["filename"], size_ms=args.sequence_length, slide_ms=args.period,
+            length_ms_col="length_ms", partial_policy="reference",
         )
     elif args.mode == "full_video":
         grouped = to_full_video(embedded, ts_ms_col="timestamp_ms", key_cols=["filename"])
     else:
         grouped = single_frame(embedded, ts_ms_col="timestamp_ms", key_cols=["filename"])
 
-    seqs = format_features(
-        grouped,
-        context_cols=["label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
-    )
-    protos = with_sequence_example(
-        seqs,
-        context_cols=["filename", "label", "dataset", "frame_per_sec", "frame_total"],
-        list_cols=["logits", "timestamp_ms"],
-        # serialize by DECLARED dtype (reference features.py:25-36), not
-        # runtime inference — an int-valued FLOAT column stays FloatList
-        context_kinds=CONTEXT_COLUMNS,
-        list_kinds=LIST_COLUMNS,
-    )
-    # persist: write_split_tfrecords materializes once PER SPLIT — without
-    # this the full decode→inference→encode pipeline re-executes 3×
-    # (correct only because every upstream op is seeded; wasteful always)
-    decorrelated = shuffle(protos.select("dataset", "proto"), seed=args.seed).persist()  # R2
-    try:
-        return write_split_tfrecords(decorrelated, "proto", "dataset", args.output_dir)  # R3+S4
-    finally:
-        decorrelated.unpersist(blocking=False)
+    seqs = format_features(grouped, context_cols=list(CTX), list_cols=list(LISTS))
+    # R2 on the sequence rows, then ONE writer job (U3 + R3 + S4): each task
+    # encodes its rows by DECLARED dtype (reference features.py:25-36) and
+    # writes one shard per split, so the proto column never exchanges
+    decorrelated = shuffle(seqs.select(*CTX, *LISTS), seed=args.seed)
+    encode = tfrecord.sequence_example_encoder(CTX, LISTS, context_kinds=CTX, list_kinds=LISTS)
+    return tfrecord.write_split_tfrecords(decorrelated, encode, "dataset", args.output_dir)
 
 
 def main(argv: list[str] | None = None, spark: SparkSession | None = None) -> dict[str, int]:

@@ -1855,7 +1855,6 @@ def q_tfrecord_sink_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rec"),
         )
         .repartition(4)
-        .localCheckpoint(eager=True)  # one corpus pass feeds 3 split sinks
     )
     base = os.path.join(
         os.path.dirname(

@@ -19,8 +19,9 @@ round-trip tests in tests/test_tfrecord.py; verified against
 tf.train.SequenceExample wire layout per the public protobuf spec.
 
 Scale: serialization is a per-row map (no shuffle); the randomizing R2
-shuffle runs BEFORE the encode so the wide binary column never exchanges
-(the reference's own column-pruning lesson, preprocess.py:241).
+shuffle runs BEFORE the encode — in the mainline the encode runs inside the
+single-pass split sink — so the wide binary column never exchanges (the
+reference's own column-pruning lesson, preprocess.py:241).
 
 Determinism convention: map entries are emitted in sorted-key order (proto
 map order is unspecified; sorting makes output bytes reproducible).
@@ -28,9 +29,14 @@ map order is unspecified; sorting makes output bytes reproducible).
 
 from __future__ import annotations
 
+import io
 import os
+import shutil
 import struct
+import uuid
+from collections import Counter
 from collections.abc import Iterable, Sequence
+from operator import itemgetter
 
 import numpy as np
 
@@ -298,6 +304,19 @@ def decode_sequence_example(buf: bytes) -> tuple[dict, dict]:
 # ------------------------------------------------------ Spark-facing ops ---
 
 
+def sequence_example_encoder(context_cols, list_cols, context_kinds=None, list_kinds=None):
+    """Row dict → SequenceExample wire bytes: the ``generate_seq_example``
+    map (reference preprocess.py:411-412) that :func:`with_sequence_example`
+    runs, and that :func:`write_split_tfrecords` can run inside its tasks."""
+
+    def encode(rec: dict) -> bytes:
+        ctx = {c: rec[c] for c in context_cols}
+        lists = {c: list(rec[c]) if rec[c] is not None else [] for c in list_cols}
+        return encode_sequence_example(ctx, lists, context_kinds, list_kinds)
+
+    return encode
+
+
 def with_sequence_example(
     df,
     context_cols,
@@ -323,16 +342,11 @@ def with_sequence_example(
 
     fields = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields)
     schema = f"{fields}, {out} binary"
+    encode_row = sequence_example_encoder(context_cols, list_cols, context_kinds, list_kinds)
 
     def encode(batches):
         for pdf in batches:
-            protos = []
-            for rec in pdf.to_dict("records"):
-                ctx = {c: rec[c] for c in context_cols}
-                lists = {c: list(rec[c]) if rec[c] is not None else [] for c in list_cols}
-                protos.append(
-                    encode_sequence_example(ctx, lists, context_kinds, list_kinds)
-                )
+            protos = [encode_row(rec) for rec in pdf.to_dict("records")]
             pdf[out] = pd.Series(protos, index=pdf.index, dtype=object)
             yield pdf
 
@@ -350,8 +364,10 @@ def write_record(fh, payload: bytes) -> None:
     fh.write(struct.pack("<I", masked_crc32c(payload)))
 
 
-def read_records(path: str, verify: bool = True) -> Iterable[bytes]:
-    with open(path, "rb") as fh:
+def read_records(path: str, verify: bool = True, content: bytes | None = None) -> Iterable[bytes]:
+    """Payloads of one TFRecord file; ``content`` = the file's bytes when
+    already in memory (``path`` then only names it in errors)."""
+    with open(path, "rb") if content is None else io.BytesIO(content) as fh:
         while True:
             header = fh.read(8)
             if not header:
@@ -370,45 +386,73 @@ def read_records(path: str, verify: bool = True) -> Iterable[bytes]:
 
 def write_tfrecords(df, bytes_col: str, output_dir: str, prefix: str) -> int:
     """Sharded TFRecord sink (reference WriteTFRecord, preprocess.py:109-128):
-    ``{output_dir}/data/{prefix}/{prefix}-NNNNN-of-MMMMM.tfrecord``, prefix
-    lowercased (P6), one shard per partition (Spark task = output shard,
-    exactly the runner-chosen sharding of the reference's sink).
-
-    Caller is expected to have applied operators.shuffle.shuffle() first —
-    kept separate so the write itself adds no exchange."""
-    prefix = str(prefix).lower()  # reference preprocess.py:119
-    out = os.path.join(output_dir, "data", prefix)
-    os.makedirs(out, exist_ok=True)
-    n_shards = df.rdd.getNumPartitions()
-
-    def write_partition(idx: int, rows) -> Iterable[int]:
-        path = os.path.join(out, f"{prefix}-{idx:05d}-of-{n_shards:05d}.tfrecord")
-        n = 0
-        with open(path, "wb") as fh:
-            for row in rows:
-                write_record(fh, row[bytes_col])
-                n += 1
-        yield n
-
-    counts = df.select(bytes_col).rdd.mapPartitionsWithIndex(write_partition).collect()
-    return sum(counts)
+    the one-split case of :func:`write_split_tfrecords`."""
+    return write_split_tfrecords(df, bytes_col, None, output_dir, (str(prefix),))[str(prefix)]
 
 
 def write_split_tfrecords(
-    df, bytes_col: str, split_col: str, output_dir: str, splits=("Train", "Val", "Test")
+    df, payload, split_col: str | None, output_dir: str, splits=("Train", "Val", "Test")
 ) -> dict[str, int]:
-    """The reference's per-split sink layout (R3 + S4: one sink per tagged
-    split, preprocess.py:389-416): each split filtered from the same frame
-    and written under its own prefix. Callers should cache/checkpoint the
-    upstream frame when all splits are consumed so the pipeline runs once
-    per branch (Beam's single-pass tagged outputs have no single-plan Spark
-    analog — SURVEY §2.3 R3)."""
-    from pyspark.sql import functions as F
+    """The reference's per-split sink (R3 + S4, preprocess.py:389-416) as ONE
+    Spark job, like Beam's single-pass tagged outputs: each task writes one
+    shard per split, ``{output_dir}/data/{split}/{split}-NNNNN-of-MMMMM.tfrecord``
+    (prefix lowercased, P6; NNNNN = partition, MMMMM = partition count, so
+    empty partitions write empty shards). Returns records per split.
 
-    return {
-        s: write_tfrecords(df.filter(F.col(split_col) == s), bytes_col, output_dir, s)
-        for s in splits
-    }
+    ``payload``: a binary column, or a callable from a row dict to record
+    bytes (``sequence_example_encoder``: encode in the writer task, so no
+    binary column exchanges). ``split_col=None`` sends every row to the one
+    split; a null or unknown split value raises ValueError. Staging files get
+    their final names only after the job succeeds, so a failed job leaves no
+    final-named partial shard. Shuffle first; the write adds no exchange."""
+    import pyarrow as pa
+    from pyspark import TaskContext
+
+    prefixes = {s: str(s).lower() for s in splits}  # reference preprocess.py:119
+    for p in prefixes.values():
+        os.makedirs(os.path.join(output_dir, "data", p), exist_ok=True)
+    staging = os.path.join(output_dir, "data", f"_staging-{uuid.uuid4().hex}")
+    os.makedirs(staging)
+    if isinstance(payload, str):
+        df = df.select(*([split_col] if split_col else []), payload)
+    encode = itemgetter(payload) if isinstance(payload, str) else payload
+
+    def write_task(batches):
+        task = TaskContext.get()
+        part = task.partitionId()
+        paths = {s: os.path.join(staging, f"{p}-{part:05d}.{task.taskAttemptId()}")
+                 for s, p in prefixes.items()}
+        files = {s: open(path, "wb") for s, path in paths.items()}
+        counts = Counter()
+        try:
+            for batch in batches:
+                for row in batch.to_pylist():
+                    key = row[split_col] if split_col else splits[0]
+                    counts[key] += 1
+                    if key in files:
+                        write_record(files[key], encode(row))
+        finally:
+            for fh in files.values():
+                fh.close()
+        rows = [dict(split=s, part=part, records=counts[s], path=paths[s]) for s in splits]
+        rows += [dict(split=repr(k), part=part, records=n, path=None)
+                 for k, n in counts.items() if k not in files]
+        yield pa.RecordBatch.from_pylist(rows)
+
+    try:
+        schema = "split string, part long, records long, path string"
+        reports = df.mapInArrow(write_task, schema).collect()
+        strays = sorted({r.split for r in reports if r.path is None})
+        if strays:
+            raise ValueError(f"{split_col} holds {', '.join(strays)}, not one of {list(splits)}")
+        n_shards = len({r.part for r in reports})
+        for r in reports:
+            p = prefixes[r.split]
+            name = f"{p}-{r.part:05d}-of-{n_shards:05d}.tfrecord"
+            os.replace(r.path, os.path.join(output_dir, "data", p, name))
+        return {s: sum(r.records for r in reports if r.split == s) for s in splits}
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def read_tfrecords_df(spark, path_glob: str):
@@ -424,19 +468,9 @@ def read_tfrecords_df(spark, path_glob: str):
         for pdf in batches:
             paths, records = [], []
             for path, content in zip(pdf["path"], pdf["content"]):
-                buf = bytes(content)
-                pos = 0
-                while pos < len(buf):
-                    (length,) = struct.unpack("<Q", buf[pos : pos + 8])
-                    payload = buf[pos + 12 : pos + 12 + length]
-                    (pcrc,) = struct.unpack(
-                        "<I", buf[pos + 12 + length : pos + 16 + length]
-                    )
-                    if masked_crc32c(payload) != pcrc:
-                        raise ValueError(f"{path}: bad payload crc at offset {pos}")
+                for payload in read_records(path, content=bytes(content)):
                     paths.append(path)
                     records.append(payload)
-                    pos += 16 + length
             yield pd.DataFrame({"path": paths, "record": records})
 
     return files.select("path", "content").mapInPandas(parse, "path string, record binary")
